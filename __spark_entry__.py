@@ -923,8 +923,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             schema="host string, rule_type string, path_prefix string",
         )
         seen = _frontier_seen(spark, sf)
-        # exercise the flagship path: co-partitioned Bloom prefilter + exact
-        # confirm — bit-identical to the plain anti-join, pinned by the oracle
+        # exercise the flagship path: Bloom prefilter (un-hinted sketch
+        # join) + exact confirm — bit-identical to the plain anti-join,
+        # pinned by the oracle
         return crawl_round(
             _frontier_candidates(spark, sf),
             seen,

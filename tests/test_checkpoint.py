@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,6 +120,21 @@ class TestResume:
         part2 = CheckpointStore(str(tmp_path / "part"))  # fresh handle = new process
         run_crawl(spark, part2, seeds_df(spark), expand, hosts, rounds=3)
 
+        assert self.collect_state(spark, full, 3) == self.collect_state(spark, part2, 3)
+
+    def test_resume_rebuilds_sketch_missing_from_checkpoint(self, spark, tmp_path):
+        """A checkpoint whose latest round has no seen_bloom (it predates
+        the sketch) resumes: the sketch is rebuilt at the loop's capacity,
+        and the run lands on the uninterrupted run's state."""
+        expand = make_expand(spark)
+        hosts = hosts_df(spark)
+        full = CheckpointStore(str(tmp_path / "full"))
+        run_crawl(spark, full, seeds_df(spark), expand, hosts, rounds=3)
+        part = CheckpointStore(str(tmp_path / "part"))
+        run_crawl(spark, part, seeds_df(spark), expand, hosts, rounds=2)
+        shutil.rmtree(os.path.join(part.base, "rounds", "r000002", "seen_bloom"))
+        part2 = CheckpointStore(part.base)
+        run_crawl(spark, part2, seeds_df(spark), expand, hosts, rounds=3)
         assert self.collect_state(spark, full, 3) == self.collect_state(spark, part2, 3)
 
     def test_resume_is_noop_when_already_complete(self, spark, tmp_path):
@@ -285,20 +301,24 @@ class TestBucketedSeenBase:
         fb = sorted(map(tuple, st.load(spark, "fetch_log", 5).collect()))
         assert fa == fb
 
-    def test_run_crawl_compact_every_cuckoo_kind_identical(self, spark, tmp_path):
-        ref = CheckpointStore(str(tmp_path / "ref3"))
-        run_crawl(spark, ref, seeds_df(spark), make_expand(spark), hosts_df(spark), rounds=4)
-        st = CheckpointStore(str(tmp_path / "cmp3"))
+
+    def test_resumed_run_compacts_at_the_same_rounds(self, spark, tmp_path):
+        """Compaction rounds are a function of the round id alone: a run
+        killed after round 3 and resumed to 5 compacts at rounds 2 and 4,
+        like the uninterrupted run — not at the resume point + K."""
+        ref = CheckpointStore(str(tmp_path / "ref4"))
         run_crawl(
-            spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark),
-            rounds=4, compact_every=1, sketch_kind="cuckoo",
+            spark, ref, seeds_df(spark), make_expand(spark), hosts_df(spark),
+            rounds=5, compact_every=2,
         )
-        assert sorted(map(tuple, ref.load_seen(spark).collect())) == sorted(
-            map(tuple, st.load_seen(spark).collect())
-        )
-        fa = sorted(map(tuple, ref.load(spark, "fetch_log", 4).collect()))
-        fb = sorted(map(tuple, st.load(spark, "fetch_log", 4).collect()))
-        assert fa == fb
+        st = CheckpointStore(str(tmp_path / "cmp4"))
+        for rounds in (3, 5):
+            run_crawl(
+                spark, st, seeds_df(spark), make_expand(spark), hosts_df(spark),
+                rounds=rounds, compact_every=2,
+            )
+        assert ref._compaction()["compacted_through"] == 4
+        assert st._compaction()["compacted_through"] == 4
 
 
 class TestCrawlReport:

@@ -168,36 +168,6 @@ class TestSeenSet:
         got = frontier.filter_unseen_with_bloom(cand, empty, bloom, 4)
         assert got.count() == 50
 
-    def test_auto_mode_bit_identical_both_sides_of_threshold(self, spark):
-        # auto = broadcast while the filters fit, copartition beyond; both
-        # legs must agree with the exact anti-join
-        cand, seen = self.make_sets(spark)
-        bloom = frontier.build_seen_bloom(seen, partitions=8)
-        exact = sorted(
-            r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
-        )
-        via_auto = sorted(
-            r["canon_url"]
-            for r in frontier.filter_unseen_with_bloom(
-                cand, seen, bloom, 8, mode="auto"
-            ).collect()
-        )
-        assert via_auto == exact
-        import wbx.frontier as fr
-
-        saved = fr._BLOOM_BROADCAST_MAX_BYTES
-        fr._BLOOM_BROADCAST_MAX_BYTES = 0  # force the copartition leg
-        try:
-            via_co = sorted(
-                r["canon_url"]
-                for r in frontier.filter_unseen_with_bloom(
-                    cand, seen, bloom, 8, mode="auto"
-                ).collect()
-            )
-        finally:
-            fr._BLOOM_BROADCAST_MAX_BYTES = saved
-        assert via_co == exact
-
     def test_incremental_bloom_no_false_negatives(self, spark):
         # the crawl loop's maintained sketch: OR-in three disjoint deltas,
         # then every seen key must still tag maybe_seen (no false negatives
@@ -410,8 +380,9 @@ class TestCrawlRound:
         assert runs[0] == runs[1]
 
     def test_bloom_backed_round_bit_identical(self, spark):
-        # the flagship path (copartitioned Bloom prefilter) must schedule
-        # exactly the same batch as the plain anti-join round
+        # the flagship path (Bloom prefilter, whose un-hinted sketch join
+        # Spark broadcasts at this size) must schedule exactly the same
+        # batch as the plain anti-join round
         urls = self.fixture_urls()
         seen_urls = [u for u, _ in urls[:40]]
         cand = spark.createDataFrame(urls, "url string, priority double")
@@ -1180,22 +1151,6 @@ class TestFilterUnseenSplit:
             r["canon_url"]
             for r in frontier.filter_unseen_with_bloom(
                 cand, recent, bloom, 8, seen_base=base
-            ).collect()
-        )
-        want = sorted(
-            r["canon_url"] for r in frontier.filter_unseen(cand, seen).collect()
-        )
-        assert got == want
-
-    def test_cuckoo_confirm_routes_through_split(self, spark):
-        from wbx import cuckoo as ck
-
-        cand, seen, base, recent = self.make_split(spark)
-        sk = ck.build_seen_cuckoo(seen, partitions=8, nbuckets=1 << 12)
-        got = sorted(
-            r["canon_url"]
-            for r in ck.filter_unseen_with_cuckoo(
-                cand, recent, sk, 8, seen_base=base
             ).collect()
         )
         want = sorted(

@@ -395,6 +395,53 @@ class TestBucketedSeenBaseNoExchange:
         assert plan.count("Exchange hashpartitioning") == 1
 
 
+class TestBloomRoundPlan:
+    def test_warm_round_starts_no_jobs_and_broadcasts_sketch(self, spark, tmp_path):
+        """A warm Bloom-backed crawl_round (rank boundaries cached, sketch
+        read back from a committed snapshot as the crawl drivers do) is
+        built without starting a Spark job — no driver-side size probe
+        picks the sketch join's distribution — and Spark's own size
+        threshold broadcasts the sketch at this scale."""
+        import re
+
+        from wbx import frontier
+
+        cand = spark.createDataFrame(
+            [(f"http://h{i % 5}.com/p{i}", float(i % 7)) for i in range(200)],
+            "url string, priority double",
+        )
+        seen = frontier.with_canonical(cand.limit(40)).select("url_hash", "canon_url")
+        path = str(tmp_path / "seen_bloom")
+        frontier.build_seen_bloom(seen, partitions=8).write.parquet(path)
+        bloom = spark.read.parquet(path)
+        hosts = spark.createDataFrame([("h1.com", 3)], "host string, budget int")
+        cache: dict = {}
+
+        def build():
+            return frontier.crawl_round(
+                cand, seen, hosts, bloom=bloom, bloom_partitions=8,
+                rank_boundary_cache=cache,
+            )
+
+        build().collect()  # cold round: fills the rank-boundary cache
+        frontier.release_rank_caches()
+        sc = spark.sparkContext
+        sc.setJobGroup("wbx-warm-round-build", "warm crawl_round plan build")
+        try:
+            out = build()
+            build_jobs = sc.statusTracker().getJobIdsForGroup("wbx-warm-round-build")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        try:
+            assert build_jobs == []
+            out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        finally:
+            frontier.release_rank_caches()
+        assert re.search(r"BroadcastHashJoin \[_bp#\d+\]", plan), plan
+        assert not re.search(r"SortMergeJoin \[_bp#\d+\]", plan)
+
+
 class TestRound4Plans:
     def test_cdx_index_single_range_sort(self, spark):
         """cdx_index's only exchange is the final range partitioning (the

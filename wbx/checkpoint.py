@@ -389,6 +389,118 @@ def crawl_report(spark: SparkSession, store: "CheckpointStore") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# one crawl-round step, shared by the batch and streaming drivers
+# ---------------------------------------------------------------------------
+
+# rank-boundary reuse across rounds (see frontier.global_rank): boundaries
+# only steer partition balance, so a round may rank against an earlier
+# round's sample; refreshed every this many rounds so the balance tracks
+# the frontier's drifting key distribution
+_RANK_REFRESH_EVERY = 8
+
+
+def _round_step(
+    store: CheckpointStore,
+    hosts: DataFrame,
+    robots: DataFrame | None,
+    batch_size: int | None,
+    default_budget: int,
+    bloom_partitions: int,
+    bloom_bits: int,
+    compact_every: int | None,
+    robots_style: str,
+):
+    """The crawl frontier's state machine as one step, shared by
+    :func:`run_crawl` and :func:`wbx.streaming.crawl_batch_processor`.
+    Returns ``step(spark, rid, candidates, extra_tables)`` which runs and
+    commits round ``rid``:
+
+    1. loads the state as of round ``rid - 1`` — empty at round 0,
+       otherwise load_seen_split plus the ``seen_bloom`` sketch (rebuilt
+       once at ``bloom_bits`` capacity from the full seen set when the
+       checkpoint predates the sketch);
+    2. calls frontier.crawl_round — looked up through the module at call
+       time, so a wrapper installed on ``wbx.frontier.crawl_round`` sees
+       every round;
+    3. commits {seen_delta, fetch_log, metrics, seen_bloom} plus
+       ``extra_tables(batch)`` as one snapshot;
+    4. compacts the seen deltas into a bucketed base when
+       ``rid % compact_every == 0`` — a function of the round alone, so a
+       resumed run compacts at the same rounds as an uninterrupted one;
+    5. releases the round's caches.
+
+    The step owns the rank-boundary cache across the rounds it runs."""
+    rank_cache: dict = {}
+
+    def step(spark: SparkSession, rid: int, candidates: DataFrame, extra_tables) -> None:
+        from wbx import frontier
+
+        prev = rid - 1
+        if prev == 0:
+            seen_base = None
+            seen = spark.createDataFrame([], "url_hash long, canon_url string")
+            sketch = frontier.empty_seen_bloom(spark)
+        else:
+            seen_base, seen, _ = store.load_seen_split(spark, prev)
+            if store.has_table("seen_bloom", prev):
+                sketch = store.load(spark, "seen_bloom", prev)
+            else:
+                sketch = frontier.build_seen_bloom(
+                    store.load_seen(spark, prev), bloom_partitions, m=bloom_bits
+                )
+        if prev % _RANK_REFRESH_EVERY == 0:
+            rank_cache.clear()
+        batch = frontier.crawl_round(
+            candidates,
+            seen,
+            hosts,
+            robots,
+            batch_size,
+            default_budget,
+            bloom=sketch,
+            bloom_partitions=bloom_partitions,
+            rank_boundary_cache=rank_cache,
+            seen_base=seen_base,
+            robots_style=robots_style,
+        ).persist()
+        # the batch is already unseen (anti-joined) and unique per canon_url
+        # (deduped), so it IS the round's exact seen-delta
+        seen_delta = batch.select("url_hash", "canon_url")
+        store.commit(
+            rid,
+            {
+                **extra_tables(batch),
+                "seen_delta": seen_delta,
+                "fetch_log": batch.select(
+                    F.lit(rid).alias("round"),
+                    "fetch_order",
+                    "canon_url",
+                    "url_hash",
+                    "host",
+                    "priority",
+                ),
+                "metrics": round_metrics(rid, batch, seen_delta),
+                "seen_bloom": frontier.update_seen_bloom(
+                    sketch, seen_delta, bloom_partitions, bloom_bits
+                ),
+            },
+        )
+        if compact_every and rid % compact_every == 0:
+            # bucket count = shuffle partitions -> the next round's
+            # candidate-side exchange (dedup groupBy, same keys) is
+            # directly compatible with the base's bucketing
+            store.compact_seen(
+                spark,
+                buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
+                bucketed=True,
+            )
+        batch.unpersist()
+        frontier.release_rank_caches()
+
+    return step
+
+
+# ---------------------------------------------------------------------------
 # multi-round crawl driver with exact resume
 # ---------------------------------------------------------------------------
 
@@ -403,61 +515,40 @@ def run_crawl(
     rounds: int = 3,
     batch_size: int | None = None,
     default_budget: int = 10,
-    use_bloom: bool = True,
     bloom_partitions: int = 64,
     bloom_bits: int = 1 << 20,
-    sketch_kind: str = "bloom",
-    cuckoo_nbuckets: int = 1 << 16,
-    rank_refresh_every: int = 8,
     compact_every: int | None = None,
     reprioritize=None,
     robots_style: str = "prefix",
 ) -> dict:
     """Batch-iterative crawl: each round schedules a fetch batch from the
-    current frontier, marks it seen, expands it into next-round candidates,
-    and commits {frontier, seen, fetch_log, metrics} as one snapshot.
+    current frontier (the seeds, then the previous round's committed
+    ``frontier``), expands it into next-round candidates, and commits the
+    round with the expanded ``frontier`` as one snapshot.
+    ``expand(batch_df) -> DataFrame(url, priority)`` must be deterministic.
+    seeds: (url, priority).
+
+    Round contract (one step shared with the streaming
+    crawl_batch_processor): a round loads the seen-set and sketch as of
+    the previous round, runs frontier.crawl_round, and commits
+    {seen_delta, fetch_log, metrics, seen_bloom} atomically. The seen-set
+    grows by ONLY the round's delta — crawl_round's anti-join makes the
+    deltas disjoint, so ``seen = union of deltas`` is exact and commit
+    cost is O(batch), constant in crawl age. The ``seen_bloom``
+    per-partition Bloom filters (``bloom_bits`` bits each over
+    ``bloom_partitions`` hash ranges) OR in only the delta and prefilter
+    the next round's membership check; results are bit-identical to the
+    exact anti-join alone. ``compact_every=K`` folds the deltas into ONE
+    bucketed base after every round divisible by K, so the cumulative set
+    then joins co-located off its bucketed scan (load_seen_split →
+    frontier.filter_unseen_split) while only the recent deltas shuffle —
+    the 10^10-URL operating mode, bit-identical with it off.
 
     Resume contract: if the store already holds N committed rounds, the
     loop continues at N+1 against the checkpointed state — a killed run
     re-driven with the same arguments lands on the identical final state
-    (all ordering is deterministic in the data; see wbx.frontier).
-
-    ``expand(batch_df) -> DataFrame(url, priority)`` must be deterministic.
-    seeds: (url, priority).
-
-    Seen-set growth contract (the 10^10-URL design point): a round writes
-    ONLY its delta — the keys it just scheduled — never a rewrite of the
-    cumulative set. crawl_round's anti-join guarantees the batch is disjoint
-    from every prior delta, so ``seen = union of deltas`` is exact with no
-    distinct/shuffle, and per-round commit cost is O(batch), constant in
-    crawl age (test_checkpoint pins this: round N's seen_delta row count
-    equals round N's fetch_log row count).
-
-    Seen-sketch contract (`use_bloom`, on by default): the loop maintains
-    per-partition Bloom filters over the seen keys ALONGSIDE the deltas —
-    each round ORs in only that round's delta (update_seen_bloom, O(batch))
-    and commits the filters as the ``seen_bloom`` table, then feeds them to
-    crawl_round's co-partitioned prefilter, so the definitely-unseen
-    majority of candidates never probes the cumulative seen table. Results
-    are bit-identical with the sketch on or off (false positives are
-    re-checked exactly; the sketch never drops a candidate). Resuming from
-    a checkpoint that predates the sketch rebuilds it once from the seen
-    set.
-
-    ``sketch_kind`` picks the sketch family: "bloom" (default — densest
-    bits/key) or "cuckoo" (wbx.cuckoo — pick it when the crawl also
-    retracts URLs between rounds; its table commits as ``seen_cuckoo`` and
-    is maintained with the same O(batch) incremental contract). Both are
-    admit-only, so the fetch batches are bit-identical across kinds.
-
-    ``compact_every``: every K committed rounds, fold the accumulated
-    seen deltas into ONE bucketed base table
-    (compact_seen(bucketed=True)) and switch the loop to the split
-    membership path (load_seen_split → frontier.filter_unseen_split):
-    the cumulative seen set then joins co-located off its bucketed scan —
-    no exchange, no sort, zero bytes of crawl history on the wire per
-    round — while only the ≤K recent deltas shuffle. This is the
-    10^10-URL operating mode; results are bit-identical with it off.
+    (all ordering is deterministic in the data; see wbx.frontier), and
+    compacts at the same rounds.
 
     ``reprioritize(frontier_df) -> DataFrame(url, priority)``: optional
     deterministic hook applied to each round's expanded frontier before it
@@ -468,110 +559,19 @@ def run_crawl(
     it changes crawl ORDER by design, so leave it unset when reproducing
     the reference's priority semantics.
     """
-    from wbx import cuckoo as _cuckoo
-    from wbx.frontier import (
-        build_seen_bloom,
-        crawl_round,
-        empty_seen_bloom,
-        release_rank_caches,
-        update_seen_bloom,
+    step = _round_step(
+        store, hosts, robots, batch_size, default_budget, bloom_partitions,
+        bloom_bits, compact_every, robots_style,
     )
 
-    if sketch_kind not in ("bloom", "cuckoo"):
-        raise ValueError("sketch_kind must be bloom | cuckoo")
-    is_bloom = sketch_kind == "bloom"
-    table = "seen_bloom" if is_bloom else "seen_cuckoo"
-    start = store.latest_round()
-    if start == 0:
-        seen_base, nbuckets = None, 0
-        seen = spark.createDataFrame([], "url_hash long, canon_url string")
-        frontier = seeds
-        sketch = (
-            empty_seen_bloom(spark) if is_bloom else _cuckoo.empty_seen_cuckoo(spark)
-        )
-    else:
-        seen_base, seen, nbuckets = store.load_seen_split(spark)
-        frontier = store.load(spark, "frontier")
-        if store.has_table(table):
-            sketch = store.load(spark, table)
-        elif is_bloom:
-            # checkpoint predates the sketch — one rebuild (from the FULL
-            # seen set, not the split view), then incremental
-            sketch = build_seen_bloom(store.load_seen(spark), bloom_partitions)
-        else:
-            sketch = _cuckoo.build_seen_cuckoo(
-                store.load_seen(spark), bloom_partitions, nbuckets=cuckoo_nbuckets
-            )
-
-    last = None
-    # rank-boundary reuse across rounds (see global_rank): boundaries only
-    # steer partition balance, so a later round may rank against an earlier
-    # round's sample; refreshed every `rank_refresh_every` rounds so the
-    # balance tracks the frontier's drifting key distribution
-    rank_cache: dict = {}
-    for rid in range(start + 1, rounds + 1):
-        if rank_refresh_every and (rid - start - 1) % rank_refresh_every == 0:
-            rank_cache.clear()
-        batch = crawl_round(
-            frontier,
-            seen,
-            hosts,
-            robots,
-            batch_size,
-            default_budget,
-            bloom=sketch if (use_bloom and is_bloom) else None,
-            bloom_partitions=bloom_partitions,
-            cuckoo=sketch if (use_bloom and not is_bloom) else None,
-            rank_boundary_cache=rank_cache,
-            robots_style=robots_style,
-            # base_buckets stays None: the dedup/tagged side already
-            # arrives hash-partitioned on the join keys, so
-            # EnsureRequirements aligns it to the bucket count with at
-            # most one exchange — an explicit repartition here would add
-            # a second
-            seen_base=seen_base,
-        ).persist()
-        # the batch is already unseen (anti-joined) and unique per canon_url
-        # (deduped), so it IS the round's exact seen-delta
-        seen_delta = batch.select("url_hash", "canon_url")
-        next_frontier = expand(batch)
+    def next_frontier(batch: DataFrame) -> dict[str, DataFrame]:
+        nxt = expand(batch)
         if reprioritize is not None:
-            next_frontier = reprioritize(next_frontier)
-        fetch_log = batch.select(
-            F.lit(rid).alias("round"), "fetch_order", "canon_url", "url_hash", "host", "priority"
-        )
-        metrics = round_metrics(rid, batch, seen_delta)
-        store.commit(
-            rid,
-            {
-                "frontier": next_frontier,
-                "seen_delta": seen_delta,
-                "fetch_log": fetch_log,
-                "metrics": metrics,
-                table: (
-                    update_seen_bloom(sketch, seen_delta, bloom_partitions, bloom_bits)
-                    if is_bloom
-                    else _cuckoo.update_seen_cuckoo(
-                        sketch, seen_delta, bloom_partitions, cuckoo_nbuckets
-                    )
-                ),
-            },
-        )
-        if compact_every and (rid - start) % compact_every == 0:
-            # bucket count = shuffle partitions -> the next round's
-            # candidate-side exchange (dedup groupBy, same keys) is
-            # directly compatible with the base's bucketing
-            store.compact_seen(
-                spark,
-                buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                bucketed=True,
-            )
-        # reload from the snapshot so each round's lineage is rooted in
-        # committed files, not an ever-deepening in-memory plan
-        seen_base, seen, nbuckets = store.load_seen_split(spark, rid)
-        frontier = store.load(spark, "frontier", rid)
-        sketch = store.load(spark, table, rid)
-        batch.unpersist()
-        release_rank_caches()
-        last = rid
-    return {"final_round": last or start, "store": store.base}
+            nxt = reprioritize(nxt)
+        return {"frontier": nxt}
+
+    start = store.latest_round()
+    for rid in range(start + 1, rounds + 1):
+        frontier = seeds if rid == 1 else store.load(spark, "frontier", rid - 1)
+        step(spark, rid, frontier, next_frontier)
+    return {"final_round": max(start, rounds), "store": store.base}

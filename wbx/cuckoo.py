@@ -11,6 +11,10 @@ explicit per-key fingerprints in a 2-choice bucket table, so membership,
 incremental insert AND **O(1) deletion** are all supported at ~2^-(f-2)
 false-positive rate for f-bit fingerprints.
 
+The crawl drivers (checkpoint.run_crawl, streaming.stream_crawl) never
+retract a key, so they maintain only the Bloom; this module is the
+standalone deletable operator (the ``frontier_unseen_cuckoo`` query).
+
 Design (mirrors the Bloom layer's split, which round-3 measurement proved
 out — the per-candidate path must never leave the JVM):
 
@@ -28,7 +32,7 @@ out — the per-candidate path must never leave the JVM):
 - **Per-hash-partition rows** `(cuckoo_part, nbuckets, fp_bits, saturated,
   fps)`: at 10^10 seen URLs one global table (~40 GB at 16-bit
   fingerprints) cannot broadcast; per-partition tables are broadcast OR
-  co-partitioned by the same auto mode as the Bloom.
+  co-partitioned, the same two modes as the Bloom.
 - **Saturation degrades, never lies.** Cuckoo insertion can fail when a
   partition's table passes ~95% load.  A failed insert sets the partition's
   `saturated` flag; a saturated partition answers "maybe seen" for EVERY
@@ -51,7 +55,6 @@ _SLOTS = 4  # fingerprints per bucket (standard (2,4)-cuckoo: ~95% max load)
 _MAX_KICKS = 500  # eviction chain bound before declaring saturation
 _FP_SEED = 0xC0  # xxhash64 seed for the fingerprint draw
 _I1_SEED = 0xC1  # xxhash64 seed for the primary bucket draw
-_CUCKOO_BROADCAST_MAX_BYTES = 64 << 20
 
 _SCHEMA = (
     "cuckoo_part int, nbuckets long, fp_bits int, saturated boolean, "
@@ -315,17 +318,11 @@ def cuckoo_might_contain(
 
     Entirely JVM-side — the candidate joins its partition's table row and
     the 2×4 slot equality checks run inside whole-stage codegen.  Modes are
-    the Bloom's: broadcast (map-side, zero shuffle), copartition (the 10^10
-    path — each table row crosses the wire once, never the driver), auto
-    (choose by measured total size)."""
-    if mode == "auto":
-        row = cuckoo.agg(F.sum(F.size("fps")).alias("slots")).collect()[0]
-        total_bytes = int(row["slots"] or 0) * 4
-        mode = (
-            "broadcast" if total_bytes <= _CUCKOO_BROADCAST_MAX_BYTES else "copartition"
-        )
+    the Bloom's: broadcast (map-side, zero shuffle), copartition (no hint —
+    Spark's size threshold decides; at 10^10 scale a shuffle join where
+    each table row crosses the wire once, never the driver)."""
     if mode not in ("broadcast", "copartition"):
-        raise ValueError("cuckoo mode must be broadcast | copartition | auto")
+        raise ValueError("cuckoo mode must be broadcast | copartition")
     tbl = cuckoo.select(
         F.col("cuckoo_part").alias("_cp"),
         F.col("nbuckets").alias("_nb"),
@@ -374,28 +371,13 @@ def filter_unseen_with_cuckoo(
     cuckoo: DataFrame,
     partitions: int = 64,
     mode: str = "broadcast",
-    seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
 ) -> DataFrame:
     """Cuckoo fast path + exact anti-join confirm — bit-identical to
-    frontier.filter_unseen (the sketch only admits, never drops; see
-    filter_unseen_with_bloom for the shared persist rationale).
-
-    ``seen_base``/``base_buckets``: compacted bucketed base; ``seen`` is
-    then the recent deltas only and the confirm runs shuffle-free on the
-    cumulative set via frontier.filter_unseen_split."""
-    from pyspark import StorageLevel
-
+    frontier.filter_unseen (the sketch only admits, never drops; the
+    persisted tag-split-confirm body is shared with
+    frontier.filter_unseen_with_bloom)."""
     from wbx import frontier as _frontier
 
-    tagged = cuckoo_might_contain(candidates, cuckoo, partitions, mode).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return _frontier._confirm_tagged(
+        cuckoo_might_contain(candidates, cuckoo, partitions, mode), seen
     )
-    _frontier._register_rank_cache(tagged)
-    definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    if seen_base is not None:
-        return definite.unionByName(
-            _frontier.filter_unseen_split(maybe, seen_base, seen, base_buckets)
-        )
-    return definite.unionByName(_frontier.filter_unseen(maybe, seen))

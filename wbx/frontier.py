@@ -518,10 +518,6 @@ def dedup_url_latest(pages: DataFrame, url_col: str = "url") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BLOOM_HASHES = 7
-# auto-mode threshold: total filter bytes the driver is willing to collect +
-# broadcast (a broadcast-hash join keeps the membership check map-side and
-# shuffle-free); beyond this the filters are shuffled to their hash ranges
-_BLOOM_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def bloom_positions(url_hash: Column, m) -> list[Column]:
@@ -659,20 +655,15 @@ def bloom_might_contain(
     whole-stage codegen — no Python anywhere on the per-candidate path.
 
     mode="broadcast": the P filter rows broadcast, the check is map-side
-    with NO shuffle at all. mode="copartition" (the 10^10 path, where the
-    filters are too big to broadcast): a plain shuffle join on the hash
-    partition — each filter row crosses the wire once per partition, never
-    the driver. mode="auto" (crawl_round's default): pick by the filters'
-    actual total size (one P-row aggregate). All modes are bit-identical
-    (tested)."""
-    if mode == "auto":
-        row = bloom.agg(F.sum("m").alias("bits")).collect()[0]
-        total_bytes = int(row["bits"] or 0) // 8
-        mode = (
-            "broadcast" if total_bytes <= _BLOOM_BROADCAST_MAX_BYTES else "copartition"
-        )
+    with NO shuffle at all. mode="copartition" (crawl_round's mode): the
+    join carries no hint, so Spark's own size threshold
+    (autoBroadcastJoinThreshold, re-checked by AQE at runtime) still
+    broadcasts small filters, and at 10^10 scale, where they are too big
+    to broadcast, it is a plain shuffle join on the hash partition — each
+    filter row crosses the wire once per partition, never the driver. Both
+    modes are bit-identical (tested)."""
     if mode not in ("broadcast", "copartition"):
-        raise ValueError("bloom mode must be broadcast | copartition | auto")
+        raise ValueError("bloom mode must be broadcast | copartition")
     blm = bloom.select(
         F.col("bloom_part").alias("_bp"),
         F.col("m").alias("_m"),
@@ -701,13 +692,6 @@ def bloom_might_contain(
         .withColumn("_maybe_seen", F.coalesce(probe, F.lit(False)))
         .drop("_bp", "_m", "_words")
     )
-
-
-def bloom_might_contain_copartitioned(
-    candidates: DataFrame, bloom: DataFrame, partitions: int = 64
-) -> DataFrame:
-    """Scale-path alias: see bloom_might_contain(mode="copartition")."""
-    return bloom_might_contain(candidates, bloom, partitions, "copartition")
 
 
 def filter_unseen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
@@ -781,7 +765,6 @@ def filter_unseen_with_bloom(
     candidates: DataFrame, seen: DataFrame, bloom: DataFrame, partitions: int = 64,
     mode: str = "broadcast",
     seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
 ) -> DataFrame:
     """Bloom fast path + exact anti-join confirm.
 
@@ -789,14 +772,26 @@ def filter_unseen_with_bloom(
     maybe-seen minority (true hits + ~1% false positives) is anti-joined.
     Result is bit-identical to :func:`filter_unseen` — the sketch only ever
     ADMITS candidates to the exact check, never drops them. `mode` picks the
-    filter-distribution strategy (broadcast vs copartition vs auto), see
+    filter-distribution strategy (broadcast vs copartition), see
     :func:`bloom_might_contain`.
 
     With ``seen_base`` (a compacted bucketed base from
     CheckpointStore.attach_seen_base), ``seen`` is the RECENT post-
     compaction deltas only, and the exact confirm runs via
     :func:`filter_unseen_split` — sketch-pruned AND shuffle-free on the
-    cumulative set.
+    cumulative set."""
+    return _confirm_tagged(
+        bloom_might_contain(candidates, bloom, partitions, mode), seen, seen_base
+    )
+
+
+def _confirm_tagged(
+    tagged: DataFrame, seen: DataFrame, seen_base: DataFrame | None = None
+) -> DataFrame:
+    """The exact half of a sketch-prefiltered membership check (Bloom or
+    cuckoo): rows tagged ``_maybe_seen`` False pass straight through, the
+    rest are confirmed by :func:`filter_unseen_split` (a plain anti-join
+    against ``seen`` when there is no compacted base).
 
     The tagged set is persisted: the definite and maybe branches both
     consume it, and without a shared materialization each would recompute
@@ -804,23 +799,14 @@ def filter_unseen_with_bloom(
     column pruning rewrites the branches differently, so ReuseExchange does
     not fire; measured 2x the whole round). Registered with the same
     release lifecycle as the rank caches (release_rank_caches /
-    FIFO-capped backstop).
-    """
+    FIFO-capped backstop)."""
     from pyspark import StorageLevel
 
-    tagged = bloom_might_contain(candidates, bloom, partitions, mode).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
     _register_rank_cache(tagged)
     definite = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    if seen_base is not None:
-        # compacted store: the maybe-minority confirms against the bucketed
-        # base co-located + the small recent deltas (filter_unseen_split)
-        return definite.unionByName(
-            filter_unseen_split(maybe, seen_base, seen, base_buckets)
-        )
-    return definite.unionByName(filter_unseen(maybe, seen))
+    return definite.unionByName(filter_unseen_split(maybe, seen_base, seen))
 
 
 # ---------------------------------------------------------------------------
@@ -1630,17 +1616,10 @@ def crawl_round(
     default_budget: int = 10,
     bloom: DataFrame | None = None,
     bloom_partitions: int = 64,
-    bloom_mode: str = "auto",
-    broadcast_small: bool | None = None,
-    cuckoo: DataFrame | None = None,
     rank_boundary_cache: dict | None = None,
     seen_base: DataFrame | None = None,
-    base_buckets: int | None = None,
     robots_style: str = "prefix",
     politeness_scope: str = "host",
-    politeness_salt: int = 0,
-    dedup_first: bool = False,
-    seen_join: str = "shuffle_hash",
 ) -> DataFrame:
     """candidates(url, priority) → ordered fetch batch.
 
@@ -1655,33 +1634,31 @@ def crawl_round(
 
     Shuffle plan (scale-critical): dedup and membership share ONE
     exchange of the candidate set because the dedup groupBy keys are
-    exactly the anti-join keys (url_hash, canon_url). In the default
-    plain-path order (see ``dedup_first``) the anti-join's
-    HashPartitioning feeds the aggregate; in dedup-first order the
-    aggregate's feeds the join — either way the candidates cross the
-    wire once. `host` is functionally dependent on canon_url and is
-    (re)derived as a map expression after the exchange instead of riding
-    through it.
+    exactly the anti-join keys (url_hash, canon_url). On the plain path
+    the seen anti-join runs on the raw canonicalized rows as a
+    shuffle-hash join (a per-partition hash table on the seen side, no
+    sort on either side — guide §3.1) and the max-priority dedup
+    aggregates AFTER it, reusing the join's clustering: one exchange, one
+    aggregate pass over only the unseen survivors. An anti-join keeps or
+    drops all duplicate rows of a group together, so max(priority) per
+    group is the same as deduplicating first. `host` is functionally
+    dependent on canon_url and is (re)derived as a map expression after
+    the exchange instead of riding through it.
 
     ``bloom``: per-partition seen-set Bloom filters (build_seen_bloom /
     update_seen_bloom — run_crawl maintains them incrementally per round).
     With the sketch, the definitely-unseen majority of candidates skips the
     anti-join against the 10^10-row seen table entirely; only the maybe-seen
     minority is confirmed exactly, so the result is bit-identical either
-    way. Default distribution mode is "auto" — shuffle-free broadcast while
-    the filters fit, copartition (no driver collect) at 10^10 scale.
-    ``broadcast_small`` is the robots/hosts join hint (see apply_robots).
-
-    ``cuckoo``: the deletable seen-sketch alternative (wbx.cuckoo — pick it
-    when the crawl retracts URLs: recrawl marks, blocklist reversals).
-    Mutually exclusive with ``bloom``; shares the partition-count and
-    distribution-mode knobs.
+    way. The sketch join carries no hint: Spark's own size threshold
+    broadcasts the filters while they are small, and shuffles them to
+    their hash ranges at 10^10 scale — no driver-side size probe.
 
     ``rank_boundary_cache``: pass one dict across rounds to reuse the
     scheduler's rank boundaries (see global_rank) — warm rounds then run
     as a single Spark action with no driver-side pre-jobs.
 
-    ``seen_base`` / ``base_buckets``: a COMPACTED bucketed seen base
+    ``seen_base``: a COMPACTED bucketed seen base
     (CheckpointStore.attach_seen_base); ``seen`` is then only the recent
     post-compaction deltas, and the exact membership check runs through
     :func:`filter_unseen_split` — the cumulative set never shuffles.
@@ -1690,54 +1667,20 @@ def crawl_round(
     ``politeness_scope``: 'host' (default — budgets per raw host) or
     'registered_domain' (budgets per eTLD+1 via
     wbx.domains.apply_domain_politeness, so subdomain farms share one
-    budget; ``hosts`` is then (domain, budget)).
-
-    ``politeness_salt``: salt_buckets for apply_politeness. Default 0 —
-    one exchange + one sort + one window for the budget cap. Pass >1 only
-    when one host truly dominates the batch (≫1/parallelism of all rows):
-    the salted phase now costs a real second full exchange (see
-    apply_politeness: the previous implicit form was collapsed by the
-    planner into a no-spread extra sort, so this default changes the
-    physical plan from [sort+window+sort+window] to [sort+window] on the
-    same single exchange — strictly less work at any scale until a single
-    reducer's host volume is the straggler).
-
-    ``dedup_first``: plain-path aggregation order. Default False — the
-    seen anti-join runs on the raw canonicalized rows and the max-priority
-    dedup aggregates AFTER it, reusing the join's (url_hash, canon_url)
-    clustering: one exchange, one aggregate pass over only the unseen
-    survivors, and no 6M-row pre-join hash map build. True restores
-    aggregate-before-join (partial map-side dedup shrinks the exchange
-    when candidate batches carry heavy intra-partition duplication — the
-    right trade when dup_factor × row_width ≫ exchange bandwidth).
-    Results are identical either way: an anti-join distributes over the
-    duplicate rows of a group (all kept or all dropped together), so
-    max(priority) per group is unchanged (pinned by tests).
-
-    ``seen_join``: strategy hint for the plain-path anti-join.
-    'shuffle_hash' (default) builds a per-partition hash table on the
-    seen side — no sort on either side (guide §3.1); per-partition build
-    memory is seen_bytes / shuffle partitions, so size partitions to the
-    seen set as usual. 'sort_merge' restores the sort-based join
-    (graceful spilling) for deployments that cannot. Any other value ⇒
-    no hint (planner's choice)."""
-    if bloom is not None and cuckoo is not None:
-        raise ValueError("pass at most one seen-sketch (bloom or cuckoo)")
+    budget; ``hosts`` is then (domain, budget)). The budget cap is one
+    exchange + one sort + one window (salt_buckets=0)."""
     canon = with_canon_url(candidates.select("url", "priority")).select(
         "canon_url", "priority"
     ).withColumn("url_hash", url_hash(F.col("canon_url")))
-    plain = bloom is None and cuckoo is None and seen_base is None
-    if plain and not dedup_first:
-        # membership-then-dedup: SHUFFLE_HASH keeps the big anti-join
-        # sort-free (guide §3.1 — the seen side builds a per-partition
-        # hash table instead of both sides paying a full sort; AQE still
-        # re-plans partition counts). The groupBy after the join needs no
-        # exchange: hashpartitioning(url_hash, canon_url) from the join
-        # already satisfies the aggregate's clustering.
-        seen_side = seen.select("url_hash", "canon_url")
-        if seen_join in ("shuffle_hash", "sort_merge"):
-            seen_side = seen_side.hint(seen_join)
-        kept = canon.join(seen_side, ["url_hash", "canon_url"], "left_anti")
+    if bloom is None and seen_base is None:
+        # membership-then-dedup: the groupBy after the join needs no
+        # exchange — hashpartitioning(url_hash, canon_url) from the join
+        # already satisfies the aggregate's clustering
+        kept = canon.join(
+            seen.select("url_hash", "canon_url").hint("shuffle_hash"),
+            ["url_hash", "canon_url"],
+            "left_anti",
+        )
         unseen = kept.groupBy("url_hash", "canon_url").agg(
             F.max("priority").alias("priority")
         )
@@ -1747,20 +1690,11 @@ def crawl_round(
         )
         if bloom is not None:
             unseen = filter_unseen_with_bloom(
-                deduped, seen, bloom, bloom_partitions, bloom_mode,
-                seen_base=seen_base, base_buckets=base_buckets,
+                deduped, seen, bloom, bloom_partitions, "copartition",
+                seen_base=seen_base,
             )
-        elif cuckoo is not None:
-            from wbx.cuckoo import filter_unseen_with_cuckoo
-
-            unseen = filter_unseen_with_cuckoo(
-                deduped, seen, cuckoo, bloom_partitions, bloom_mode,
-                seen_base=seen_base, base_buckets=base_buckets,
-            )
-        elif seen_base is not None:
-            unseen = filter_unseen_split(deduped, seen_base, seen, base_buckets)
         else:
-            unseen = filter_unseen(deduped, seen)
+            unseen = filter_unseen_split(deduped, seen_base, seen)
     # url_hash is a pure function of canon_url and nothing between the
     # membership stage and the output projection reads it (politeness
     # derives its salt from xxhash64(canon_url) directly), so it is
@@ -1771,23 +1705,19 @@ def crawl_round(
     unseen = with_url_host(unseen.drop("url_hash"))
     if robots is not None:
         if robots_style == "wildcard":
-            unseen = apply_robots_wildcard(unseen, robots, broadcast_small)
+            unseen = apply_robots_wildcard(unseen, robots)
         elif robots_style == "prefix":
-            unseen = apply_robots(unseen, robots, broadcast_small)
+            unseen = apply_robots(unseen, robots)
         else:
             raise ValueError("robots_style must be prefix | wildcard")
     if politeness_scope == "registered_domain":
         from wbx.domains import apply_domain_politeness
 
         polite = apply_domain_politeness(
-            unseen, hosts, default_budget, broadcast_small,
-            salt_buckets=politeness_salt,
+            unseen, hosts, default_budget, salt_buckets=0
         )
     elif politeness_scope == "host":
-        polite = apply_politeness(
-            unseen, hosts, default_budget, broadcast_small,
-            salt_buckets=politeness_salt,
-        )
+        polite = apply_politeness(unseen, hosts, default_budget, salt_buckets=0)
     else:
         raise ValueError("politeness_scope must be host | registered_domain")
     return schedule_fetch_batch(

@@ -228,23 +228,22 @@ def crawl_batch_processor(
     robots: DataFrame | None = None,
     batch_size: int | None = None,
     default_budget: int = 10,
-    use_bloom: bool = True,
     bloom_partitions: int = 64,
     bloom_bits: int = 1 << 20,
-    sketch_kind: str = "bloom",
-    cuckoo_nbuckets: int = 1 << 16,
     compact_every: int | None = None,
     robots_style: str = "prefix",
 ):
     """foreachBatch processor for :func:`stream_crawl` (factored out so the
     exactly-once replay contract is unit-testable without a running query).
 
-    Each micro-batch of discovered candidate (url, priority) rows is
-    scheduled as ONE crawl round with the batch engine's crawl_round —
-    identical canonicalization, seen anti-join (Bloom-prefiltered), robots,
-    politeness and deterministic ordering — and committed atomically to the
-    CheckpointStore as {seen_delta, fetch_log, metrics, seen_bloom,
-    stream_marker}.
+    Each micro-batch of discovered candidate (url, priority) rows is ONE
+    crawl round of the same step batch run_crawl drives — the round
+    contract (seen-set + ``seen_bloom`` sketch loaded as of the previous
+    round, frontier.crawl_round, atomic commit of {seen_delta, fetch_log,
+    metrics, seen_bloom}, compaction after every round divisible by
+    ``compact_every``) is stated once, on wbx.checkpoint.run_crawl. The
+    streaming round commits ``stream_marker`` in place of run_crawl's
+    ``frontier``: in streaming mode link discovery IS the input stream.
 
     Exactly-once: Spark redelivers at most the last uncommitted micro-batch
     after a restart. The committed round's ``stream_marker`` table records
@@ -252,31 +251,14 @@ def crawl_batch_processor(
     the LATEST committed round and is skipped, so the seen-set and fetch
     log never double-count (state lives in the store, which commits via
     atomic rename — a crash mid-commit leaves the prior round visible and
-    the replay re-runs cleanly).
+    the replay re-runs cleanly; a crash between commit and compaction
+    leaves the guard unaffected)."""
+    from wbx.checkpoint import _round_step
 
-    ``sketch_kind``: "bloom" (default) or "cuckoo" — same sketch families
-    and O(batch) incremental maintenance as batch run_crawl.
-
-    ``compact_every``: every K committed rounds, fold the seen deltas into
-    a bucketed base (compact_seen(bucketed=True)) and confirm membership
-    through the shuffle-free split path — same contract and bit-identical
-    results as batch run_crawl(compact_every=K). Compaction runs AFTER the
-    round commits, so a crash between commit and compaction just retries
-    the compaction next round; the replay guard is unaffected."""
-    from wbx import cuckoo as _cuckoo
-    from wbx.checkpoint import round_metrics
-    from wbx.frontier import (
-        build_seen_bloom,
-        crawl_round,
-        empty_seen_bloom,
-        release_rank_caches,
-        update_seen_bloom,
+    step = _round_step(
+        store, hosts, robots, batch_size, default_budget, bloom_partitions,
+        bloom_bits, compact_every, robots_style,
     )
-
-    if sketch_kind not in ("bloom", "cuckoo"):
-        raise ValueError("sketch_kind must be bloom | cuckoo")
-    is_bloom = sketch_kind == "bloom"
-    table = "seen_bloom" if is_bloom else "seen_cuckoo"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -291,73 +273,16 @@ def crawl_batch_processor(
             marker = store.load(spark, "stream_marker", prev).first()
             if marker is not None and marker["batch_id"] == batch_id:
                 return  # replay of the already-committed epoch
-        if prev == 0:
-            seen_base, nbuckets = None, 0
-            seen = spark.createDataFrame([], "url_hash long, canon_url string")
-            sketch = (
-                empty_seen_bloom(spark)
-                if is_bloom
-                else _cuckoo.empty_seen_cuckoo(spark)
-            )
-        else:
-            seen_base, seen, nbuckets = store.load_seen_split(spark)
-            if store.has_table(table, prev):
-                sketch = store.load(spark, table, prev)
-            elif is_bloom:
-                sketch = build_seen_bloom(store.load_seen(spark), bloom_partitions)
-            else:
-                sketch = _cuckoo.build_seen_cuckoo(
-                    store.load_seen(spark), bloom_partitions, nbuckets=cuckoo_nbuckets
-                )
-        rid = prev + 1
-        batch = crawl_round(
+        step(
+            spark,
+            prev + 1,
             batch_df,
-            seen,
-            hosts,
-            robots,
-            batch_size,
-            default_budget,
-            bloom=sketch if (use_bloom and is_bloom) else None,
-            bloom_partitions=bloom_partitions,
-            cuckoo=sketch if (use_bloom and not is_bloom) else None,
-            seen_base=seen_base,
-            robots_style=robots_style,
-        ).persist()
-        seen_delta = batch.select("url_hash", "canon_url")
-        fetch_log = batch.select(
-            F.lit(rid).alias("round"),
-            "fetch_order",
-            "canon_url",
-            "url_hash",
-            "host",
-            "priority",
-        )
-        store.commit(
-            rid,
-            {
-                "seen_delta": seen_delta,
-                "fetch_log": fetch_log,
-                "metrics": round_metrics(rid, batch, seen_delta),
-                table: (
-                    update_seen_bloom(sketch, seen_delta, bloom_partitions, bloom_bits)
-                    if is_bloom
-                    else _cuckoo.update_seen_cuckoo(
-                        sketch, seen_delta, bloom_partitions, cuckoo_nbuckets
-                    )
-                ),
+            lambda _batch: {
                 "stream_marker": spark.createDataFrame(
                     [(int(batch_id),)], "batch_id long"
-                ),
+                )
             },
         )
-        if compact_every and rid % compact_every == 0:
-            store.compact_seen(
-                spark,
-                buckets=int(spark.conf.get("spark.sql.shuffle.partitions")),
-                bucketed=True,
-            )
-        batch.unpersist()
-        release_rank_caches()
 
     return process
 
